@@ -561,7 +561,10 @@ def _ranked_packed_grams(t: str):
     sorted(Counter(_char_ngrams(t)).items(), ...)[:DOC_TOP]."""
     import numpy as np
 
-    cps = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
+    # surrogatepass: a lone surrogate (legal in a Python str, e.g. from
+    # surrogateescape decoding) keeps its code point, which the letter
+    # table classifies as Cs -> separator, exactly as the reference does
+    cps = np.frombuffer(t.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
     if not len(cps):
         return None
     uniq_cp = np.unique(cps)

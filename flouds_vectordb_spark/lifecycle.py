@@ -105,6 +105,15 @@ def persist_scope() -> Iterator[list[DataFrame]]:
             df.unpersist()
 
 
+_AQE_KEY = "spark.sql.adaptive.enabled"
+# the AQE key is session-global, so no_aqe blocks on different threads are
+# serialised: overlapping save/restore pairs would otherwise interleave (A
+# sets false, B saves false, A restores, B restores false) and leave AQE
+# off for the whole session. Re-entrant so a block may nest in the same
+# thread.
+_AQE_LOCK = threading.RLock()
+
+
 @contextmanager
 def no_aqe(spark) -> Iterator[None]:
     """Disable AQE for one bounded driver-regime action (r14). The driver
@@ -114,10 +123,18 @@ def no_aqe(spark) -> Iterator[None]:
     each shuffle stage as its OWN job, a pure scheduling barrier worth
     ~0.1-0.2 s per action at gate scale (measured 2 jobs -> 1 on the
     minhash fetch). Always scoped: the callers sit behind the <= 16 MB
-    input guards, so every at-scale plan keeps AQE."""
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+    input guards, so every at-scale plan keeps AQE.
+
+    Blocks are serialised across threads (_AQE_LOCK), and the key is
+    restored exactly: a key that was unset before the block is unset
+    again after it, not pinned to an explicit value."""
+    with _AQE_LOCK:
+        old = spark.conf.get(_AQE_KEY, None)
+        spark.conf.set(_AQE_KEY, "false")
+        try:
+            yield
+        finally:
+            if old is None:
+                spark.conf.unset(_AQE_KEY)
+            else:
+                spark.conf.set(_AQE_KEY, old)

@@ -20,11 +20,12 @@ This module is the set-of-queries shape:
 - the k-cut is ONE per-qid window over (qid, id, score) scalars — the
   shuffle carries no vectors and no payload (late materialization: payload
   joins back for the <= nq*fetch survivors only),
-- the full single-query post-filter pipeline (score_threshold, empty-chunk
-  drop, text filter, meta_required, meta_filter, projection — the
-  vector_store.py:519-582 chain) applies unchanged; the request TEMPLATE is
-  shared by all queries (the batch-retrieval shape: one search config, many
-  vectors).
+- everything after the k-cut IS the single-query code: dense_search's
+  post_filter_tail (late payload join, score_threshold, empty-chunk drop,
+  text filter, meta_required, meta_filter, final rank, rounding,
+  projection — the vector_store.py:519-582 chain), called with its rank
+  window partitioned by qid; the request TEMPLATE is shared by all queries
+  (the batch-retrieval shape: one search config, many vectors).
 
 Scoring determinism matches functions/vector.py's oracle contract: per-pair
 sequential float64 folds, and the per-query norms (COSINE) are computed
@@ -47,12 +48,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flouds_vectordb_spark.functions import vector as V
-from flouds_vectordb_spark.functions.text import text_filter_predicate, text_filter_sql
+from flouds_vectordb_spark.functions.text import text_filter_sql
 from flouds_vectordb_spark.operators.dense_search import (
     RANK_DECIMALS,
     DenseSearchRequest,
-    meta_filter_predicate,
-    meta_kv_column,
+    bounded_candidates,
+    post_filter_tail,
 )
 
 QueryBatch = Sequence[tuple[int, Sequence[float]]]
@@ -100,31 +101,17 @@ def _pair_score(metric: str, vector_col: str) -> Column:
 
 def _ranked_pipeline(
     cand: DataFrame,
-    payload_df: DataFrame | None,
+    payload_df: DataFrame,
     req: DenseSearchRequest,
     id_col: str,
     chunk_col: str | None,
     meta_col: str | None,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Shared tail of every search_many variant. cand: (qid, _id, _score)
-    candidate pairs (scalars only). Mirrors dense_search's phases with
-    every window PARTITIONED BY qid."""
-    if req.effective_text_filter is not None and chunk_col is None:
-        raise ValueError("text_filter requires chunk_col")
-    if (req.meta_filter or req.meta_required) and meta_col is None:
-        raise ValueError("meta_filter/meta_required require meta_col")
-
-    slim = (
-        cand.filter(F.col("_score").isNotNull())
-        .withColumn("_score_r", F.round(F.col("_score"), RANK_DECIMALS))
-    )
-    lo, hi = req.score_bounds()
-    if lo is not None:
-        slim = slim.filter(F.col("_score") > F.lit(lo))
-    if hi is not None:
-        slim = slim.filter(F.col("_score") <= F.lit(hi))
-
+    """Shared ranking of every search_many variant. cand: (qid, _id, _score)
+    candidate pairs (scalars only). The k-cut is one per-qid window; the
+    rest is dense_search's own post_filter_tail, partitioned by qid."""
+    slim = bounded_candidates(cand, req)
     fetch = req.fetch + req.offset
     w = Window.partitionBy("qid").orderBy(F.col("_score_r").desc(), F.col("_id").asc())
     topk = (
@@ -132,54 +119,8 @@ def _ranked_pipeline(
         .filter((F.col("_pre") > req.offset) & (F.col("_pre") <= fetch))
         .drop("_pre")
     )
-
-    # late materialization: payload joins back for the <= nq*fetch survivors
-    meta_out = meta_col is not None and "meta" in req.effective_output_fields
-    need_meta = bool(req.meta_filter or req.meta_required) or meta_out
-    payload = [c for c in (chunk_col, meta_col if need_meta else None, *extra_cols) if c]
-    if payload:
-        if payload_df is None:
-            raise ValueError("payload columns requested but no payload_df given")
-        keep = list(dict.fromkeys([id_col, *payload]))
-        out = (
-            payload_df.select(*keep)
-            .join(F.broadcast(topk), F.col(id_col) == F.col("_id"), "inner")
-            .drop("_id")
-        )
-    else:
-        out = topk.withColumnRenamed("_id", id_col)
-
-    # post-filter chain — identical predicates to dense_search phase 3
-    if req.score_threshold is not None:
-        milvus_score = -F.col("_score") if req.metric.upper() == "L2" else F.col("_score")
-        out = out.filter(
-            F.round(milvus_score, req.threshold_decimals)
-            >= F.lit(float(req.score_threshold)))
-    if chunk_col is not None:
-        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
-    if req.effective_text_filter is not None:
-        out = out.filter(text_filter_predicate(
-            F.col(chunk_col), req.effective_text_filter,
-            req.minimum_words_match, req.include_stop_words))
-    if req.meta_required:
-        out = out.filter(F.size(F.col(meta_col)) > 0)
-    if req.meta_filter:
-        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
-
-    wf = Window.partitionBy("qid").orderBy(F.col("_score_r").desc(), F.col(id_col).asc())
-    out = (out.withColumn("rank", F.row_number().over(wf))
-           .filter(F.col("rank") <= req.effective_limit))
-
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    cols = [F.col("qid"), F.col(id_col), F.col("rank"),
-            F.round(F.col("_score"), dec).alias("score")]
-    if chunk_col and "chunk" in req.effective_output_fields:
-        cols.append(F.col(chunk_col))
-    if meta_out:
-        cols.append(meta_kv_column(meta_col))
-    cols += [F.col(c) for c in extra_cols]
-    return out.select(*cols)
+    return post_filter_tail(topk, payload_df, req, id_col, chunk_col, meta_col,
+                            extra_cols, keys=("qid",))
 
 
 def dense_search_many(

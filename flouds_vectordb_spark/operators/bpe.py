@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from flouds_vectordb_spark.functions.text import tokenize, tokenize_sql
 from flouds_vectordb_spark.lifecycle import tracked_persist
+from flouds_vectordb_spark.plan_probe import plan_size_bytes
 
 EOW = "</w>"
 
@@ -51,14 +52,6 @@ EOW = "</w>"
 # what scales, and the round cost is corpus-size independent.
 _BPE_DRIVER_INPUT_BYTES = 16 << 20
 _BPE_DRIVER_MAX_WORDS = 2_000_000
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
 
 
 def _fold_word(syms: list, lhs: str, rhs: str) -> list:
@@ -160,7 +153,7 @@ def bpe_train(df: DataFrame, n_merges: int = 32, text_col: str = "text",
         raise ValueError("n_merges must be >= 1")
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    if not df.isStreaming and _plan_size_bytes(df) <= _BPE_DRIVER_INPUT_BYTES:
+    if not df.isStreaming and plan_size_bytes(df) <= _BPE_DRIVER_INPUT_BYTES:
         from flouds_vectordb_spark.lifecycle import no_aqe
 
         with no_aqe(df.sparkSession):  # one job, not agg-stage + result

@@ -45,6 +45,7 @@ from flouds_vectordb_spark.functions.hashing import (
 )
 from flouds_vectordb_spark.functions.text import tokenize, tokenize_sql
 from flouds_vectordb_spark.lifecycle import tracked_persist as _persist
+from flouds_vectordb_spark.plan_probe import is_local_relation, plan_size_bytes
 from flouds_vectordb_spark.sources.tables import spread_small_input as _spread
 
 
@@ -95,16 +96,6 @@ def _round6(x: float) -> float:
 
     return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
                                            rounding=ROUND_HALF_UP))
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for df's optimized plan (file bytes for
-    parquet scans). Falls back to 'large' — the scale-safe regime."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
 
 
 # --- exact dedup -------------------------------------------------------------
@@ -478,7 +469,7 @@ def _driver_minhash_edges(rows: list[tuple],
 
 def _driver_regime(df: DataFrame) -> bool:
     return (not df.isStreaming
-            and _plan_size_bytes(df) <= _MINHASH_DRIVER_INPUT_BYTES)
+            and plan_size_bytes(df) <= _MINHASH_DRIVER_INPUT_BYTES)
 
 
 def _jaccard_filtered(pairs: DataFrame, threshold: float) -> DataFrame:
@@ -634,7 +625,7 @@ def dedup_minhash(
             return local_df(df.sparkSession, edges, schema)
     entries, sets = _band_entries(df, id_col, text_col, n_sigs, n_bands,
                                   shingle_n)
-    small = _plan_size_bytes(df) <= _MINHASH_SMALL_INPUT_BYTES
+    small = plan_size_bytes(df) <= _MINHASH_SMALL_INPUT_BYTES
     if small:
         # BROADCAST REGIME (gate-scale corpora): every table here sits
         # under the broadcast threshold, so the plain two-sided join plan
@@ -803,7 +794,7 @@ def dedup_minhash_components(
             idt = dict(df.dtypes)[id_col]
             return _driver_union_find([(a, b) for a, b, _ in edges], idt,
                                       df.sparkSession)
-    small = _plan_size_bytes(df) <= _MINHASH_SMALL_INPUT_BYTES
+    small = plan_size_bytes(df) <= _MINHASH_SMALL_INPUT_BYTES
     entries, sets = _band_entries(df, id_col, text_col, n_sigs, n_bands,
                                   shingle_n)
     if not small:
@@ -1419,19 +1410,11 @@ def dedup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # the persist/count/symmetrize machinery below would spend 2-3
     # scheduled jobs re-deriving what one trivial collect reads back.
     # Union-find needs no symmetrized edges (union(a,b) is symmetric).
-    if driver_threshold > 0:
-        try:
-            is_local = (pairs._jdf.queryExecution().optimizedPlan()
-                        .getClass().getSimpleName() == "LocalRelation")
-        except Exception:
-            is_local = False
-        if is_local:
-            rows = [(r[0], r[1])
-                    for r in pairs.select(id_a, id_b).collect()]
-            if len(rows) <= driver_threshold:
-                id_type = dict(pairs.dtypes)[id_a]
-                return _driver_union_find(rows, id_type,
-                                          pairs.sparkSession)
+    if driver_threshold > 0 and is_local_relation(pairs):
+        rows = [(r[0], r[1]) for r in pairs.select(id_a, id_b).collect()]
+        if len(rows) <= driver_threshold:
+            id_type = dict(pairs.dtypes)[id_a]
+            return _driver_union_find(rows, id_type, pairs.sparkSession)
     # persist the INPUT pair list before symmetrizing: the union's two
     # branches evaluate their child independently, so an unpersisted
     # upstream (e.g. the whole MinHash-LSH lineage) would run TWICE —
@@ -2284,12 +2267,7 @@ def remove_exact_substrings(
     Exactness pinned by test_remove_substrings_driver_regime_equals_
     distributed."""
     if _driver_regime(df):
-        try:
-            spans_local = (spans._jdf.queryExecution().optimizedPlan()
-                           .getClass().getSimpleName() == "LocalRelation")
-        except Exception:
-            spans_local = False
-        if spans_local:
+        if is_local_relation(spans):
             from flouds_vectordb_spark.functions.pyhash import py_tokens
 
             by_id: dict = {}

@@ -163,6 +163,7 @@ class DenseSearchRequest:
 
     @property
     def threshold_decimals(self) -> int:
+        """Decimals a score is compared and reported at."""
         rd = self.effective_round_decimal
         return rd if rd > 0 else RANK_DECIMALS
 
@@ -202,56 +203,45 @@ def meta_filter_predicate(meta: Column, meta_filter: dict[str, str]) -> Column:
     return pred
 
 
-def dense_search(
-    df: DataFrame,
-    req: DenseSearchRequest,
-    id_col: str = "id",
-    vector_col: str = "vector",
-    chunk_col: str | None = None,
-    meta_col: str | None = None,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Returns (id, rank, score [, chunk, extra...]) — rank 1-based after
-    post-filtering, score rounded to round_decimal (or 6 for determinism).
+def rank_window(keys: tuple[str, ...]):
+    """Rank window per query: keys=() for one query, ("qid",) for a block.
+    keys=() returns Window itself, not Window.partitionBy(): same plan,
+    fewer py4j round trips on the single-query path."""
+    return Window.partitionBy(*keys) if keys else Window
 
-    Documented divergences from the reference, both deliberate:
-    - L2 scores are returned NEGATED (larger-is-better for every metric);
-      the unit is Milvus's squared distance, so thresholds/bounds carry
-      over with a sign flip only (score_bounds handles it).
-    - Post-filters evaluate against the STORED chunk/meta columns, not the
-      returned entity: the reference drops every hit when output_fields
-      excludes 'chunk' (entity.get('chunk') is None -> continue) or fails
-      meta filters when it excludes 'meta' — projection there silently
-      disables/empties results; here projection only affects output shape.
-    """
-    if req.effective_text_filter is not None and chunk_col is None:
-        raise ValueError("text_filter requires chunk_col")
-    if (req.meta_filter or req.meta_required) and meta_col is None:
-        raise ValueError("meta_filter/meta_required require meta_col")
 
-    # ---- phase 1: score + k-cut over (id, score) only ----
-    score = V.metric_score_q(req.metric, F.col(vector_col), req.query_vector)
+def bounded_candidates(scored: DataFrame, req: DenseSearchRequest) -> DataFrame:
+    """(..., _id, _score) -> non-null scores inside the range-search bounds,
+    plus the rank key _score_r: the input of the k-cut."""
     slim = (
-        df.select(F.col(id_col).alias("_id"), score.alias("_score"))
-        .filter(F.col("_score").isNotNull())
+        scored.filter(F.col("_score").isNotNull())
         .withColumn("_score_r", F.round(F.col("_score"), RANK_DECIMALS))
     )
-
     lo, hi = req.score_bounds()
     if lo is not None:
         slim = slim.filter(F.col("_score") > F.lit(lo))
     if hi is not None:
         slim = slim.filter(F.col("_score") <= F.lit(hi))
+    return slim
 
-    fetch = req.fetch + req.offset
-    topk = slim.orderBy(F.col("_score_r").desc(), F.col("_id").asc()).limit(fetch)
-    if req.offset:
-        w = Window.orderBy(F.col("_score_r").desc(), F.col("_id").asc())
-        topk = (
-            topk.withColumn("_pre_rank", F.row_number().over(w))
-            .filter(F.col("_pre_rank") > req.offset)
-            .drop("_pre_rank")
-        )
+
+def post_filter_tail(
+    topk: DataFrame,
+    payload_df: DataFrame,
+    req: DenseSearchRequest,
+    id_col: str,
+    chunk_col: str | None,
+    meta_col: str | None,
+    extra_cols: tuple[str, ...] = (),
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Phases 2-3 after the k-cut topk (*keys, _id, _score, _score_r), per
+    query key (rank_window): payload join from payload_df, the post-filter
+    chain, final rank and projection -> (*keys, id, rank, score, ...)."""
+    if req.effective_text_filter is not None and chunk_col is None:
+        raise ValueError("text_filter requires chunk_col")
+    if (req.meta_filter or req.meta_required) and meta_col is None:
+        raise ValueError("meta_filter/meta_required require meta_col")
 
     # ---- phase 2: late materialization — payload only for survivors ----
     meta_out = meta_col is not None and "meta" in req.effective_output_fields
@@ -260,7 +250,7 @@ def dense_search(
     if payload:
         keep = list(dict.fromkeys([id_col, *payload]))
         out = (
-            df.select(*keep)
+            payload_df.select(*keep)
             .join(F.broadcast(topk), F.col(id_col) == F.col("_id"), "inner")
             .drop("_id")
         )
@@ -291,14 +281,13 @@ def dense_search(
     if req.meta_filter:
         out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
 
-    # trim back to the original limit, assign final rank (<=fetch rows here,
-    # so the un-partitioned window is bounded — it must stay behind the limit)
-    w = Window.orderBy(F.col("_score_r").desc(), F.col(id_col).asc())
+    # trim back to the original limit, assign final rank (<=fetch rows per
+    # query here, so the window is bounded — it must stay behind the limit)
+    w = rank_window(keys).orderBy(F.col("_score_r").desc(), F.col(id_col).asc())
     out = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= req.effective_limit)
 
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    cols = [F.col(id_col), F.col("rank"), F.round(F.col("_score"), dec).alias("score")]
+    cols = [*(F.col(k) for k in keys), F.col(id_col), F.col("rank"),
+            F.round(F.col("_score"), req.threshold_decimals).alias("score")]
     # Q12 projection: output_fields picks the payload columns; the result
     # row shape mirrors EmbeddedMeta = content + meta (embedded_meta.py:9-20)
     if chunk_col and "chunk" in req.effective_output_fields:
@@ -307,6 +296,45 @@ def dense_search(
         cols.append(meta_kv_column(meta_col))
     cols += [F.col(c) for c in extra_cols]
     return out.select(*cols)
+
+
+def dense_search(
+    df: DataFrame,
+    req: DenseSearchRequest,
+    id_col: str = "id",
+    vector_col: str = "vector",
+    chunk_col: str | None = None,
+    meta_col: str | None = None,
+    extra_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Returns (id, rank, score [, chunk, extra...]) — rank 1-based after
+    post-filtering, score rounded to round_decimal (or 6 for determinism).
+
+    Documented divergences from the reference, both deliberate:
+    - L2 scores are returned NEGATED (larger-is-better for every metric);
+      the unit is Milvus's squared distance, so thresholds/bounds carry
+      over with a sign flip only (score_bounds handles it).
+    - Post-filters evaluate against the STORED chunk/meta columns, not the
+      returned entity: the reference drops every hit when output_fields
+      excludes 'chunk' (entity.get('chunk') is None -> continue) or fails
+      meta filters when it excludes 'meta' — projection there silently
+      disables/empties results; here projection only affects output shape.
+    """
+    # ---- phase 1: score + k-cut over (id, score) only ----
+    score = V.metric_score_q(req.metric, F.col(vector_col), req.query_vector)
+    slim = bounded_candidates(
+        df.select(F.col(id_col).alias("_id"), score.alias("_score")), req)
+
+    fetch = req.fetch + req.offset
+    topk = slim.orderBy(F.col("_score_r").desc(), F.col("_id").asc()).limit(fetch)
+    if req.offset:
+        w = Window.orderBy(F.col("_score_r").desc(), F.col("_id").asc())
+        topk = (
+            topk.withColumn("_pre_rank", F.row_number().over(w))
+            .filter(F.col("_pre_rank") > req.offset)
+            .drop("_pre_rank")
+        )
+    return post_filter_tail(topk, df, req, id_col, chunk_col, meta_col, extra_cols)
 
 
 def dense_search_sql(

@@ -30,7 +30,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flouds_vectordb_spark.functions import vector as V
-from flouds_vectordb_spark.operators.dense_search import DenseSearchRequest
+from flouds_vectordb_spark.operators.dense_search import (
+    DenseSearchRequest,
+    meta_filter_predicate,
+    meta_kv_column,
+    rank_window,
+)
 from flouds_vectordb_spark.operators.sparse_search import (
     SparseSearchRequest,
     sparse_scores_sql,
@@ -88,15 +93,10 @@ class HybridSearchRequest:
         payload with a non-empty list without chunk/meta, e.g. ("id",)."""
         return tuple(self.output_fields) or ("chunk", "meta")
 
-    @property
-    def effective_round_decimal(self) -> int:
-        """`round_decimal or -1` (vector_store.py:459): 0 collapses to -1."""
-        return self.round_decimal if self.round_decimal > 0 else -1
-
-    @property
-    def threshold_decimals(self) -> int:
-        rd = self.effective_round_decimal
-        return rd if rd > 0 else RANK_DECIMALS
+    # `round_decimal or -1` (vector_store.py:459) and the decimals scores
+    # are compared and reported at: the dense surface's own definitions
+    effective_round_decimal = DenseSearchRequest.effective_round_decimal
+    threshold_decimals = DenseSearchRequest.threshold_decimals
 
     def sparse_request(self) -> SparseSearchRequest:
         return SparseSearchRequest(
@@ -134,6 +134,102 @@ def _dense_branch(df: DataFrame, req: HybridSearchRequest, id_col: str,
     )
 
 
+def fuse_and_filter(
+    dense: DataFrame,
+    sparse: DataFrame,
+    df: DataFrame,
+    req: HybridSearchRequest,
+    id_col: str,
+    chunk_col: str | None,
+    meta_col: str | None,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """RRF fusion of the branches dense (*keys, id, dense_rank_, dense_score)
+    and sparse (*keys, id, sparse_rank_) plus the post pipeline, per query
+    key (rank_window). The id column is id_col for one query, "id" for a
+    block."""
+    if (req.meta_filter or req.meta_required) and meta_col is None:
+        raise ValueError("meta_filter/meta_required require meta_col")
+
+    # union+groupBy fusion, not a full-outer join (r11): the two branch
+    # tables are bounded (<= 50 rows per query each) but a full-outer join
+    # can't broadcast, so it planned a two-sided sort-merge — two
+    # exchanges + sorts. The union form is ONE hash aggregation; max()
+    # over the one-non-null-per-key columns reproduces the outer join's
+    # row merge exactly (each key appears at most once per branch).
+    fused = (
+        dense.withColumn("sparse_rank_", F.lit(None).cast("int"))
+        .unionByName(
+            sparse.withColumn("dense_rank_", F.lit(None).cast("int"))
+            .withColumn("dense_score", F.lit(None).cast("double")))
+    )
+    if keys:
+        # a block repartitions by qid ALONE before the merge agg (r12):
+        # hash(qid) satisfies both the groupBy(qid, id) clustering
+        # requirement (subset rule) and the final rank window's
+        # partitionBy(qid), so the agg and the window share ONE exchange
+        # instead of (qid,id)-agg + qid-window. Scale-safe: both branch
+        # tables are rank-limited to <= nq*branch_limit rows.
+        fused = fused.repartition(*keys)
+    fused = (
+        fused.groupBy(*keys, "id")
+        .agg(F.max("dense_rank_").alias("dense_rank_"),
+             F.max("dense_score").alias("dense_score"),
+             F.max("sparse_rank_").alias("sparse_rank_"))
+    )
+    kf = float(RRF_K)
+    rrf = (
+        F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("dense_rank_").cast("double")), F.lit(0.0))
+        + F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("sparse_rank_").cast("double")), F.lit(0.0))
+    )
+    fused = fused.withColumn("_rrf", rrf).withColumn("_rrf_r", F.round(F.col("_rrf"), RANK_DECIMALS))
+
+    # late materialization for the fused survivors (<=100 rows per query)
+    out_id = "id" if keys else id_col
+    meta_out = meta_col is not None and "meta" in req.effective_output_fields
+    need_meta = bool(req.meta_filter or req.meta_required) or meta_out
+    payload = [c for c in (chunk_col, meta_col if need_meta else None) if c]
+    if payload:
+        keep = list(dict.fromkeys([id_col, *payload]))
+        out = (
+            df.select(*[F.col(c) for c in keep])
+            .join(F.broadcast(fused.withColumnRenamed("id", "_fid")),
+                  F.col(id_col) == F.col("_fid"), "inner")
+            .drop("_fid")
+        )
+        if out_id != id_col:
+            out = out.withColumnRenamed(id_col, out_id)
+    else:
+        out = fused.withColumnRenamed("id", out_id) if out_id != "id" else fused
+
+    # score_threshold on the ORIGINAL dense score; sparse-only hits bypass.
+    # Compared in Milvus score space: similarity, or (squared) distance
+    # = -dense_score for L2 (vector_store.py:766-770)
+    if req.score_threshold is not None:
+        ms = (-F.col("dense_score") if req.metric.upper() == "L2"
+              else F.col("dense_score"))
+        ds = F.round(ms, req.threshold_decimals)
+        out = out.filter(
+            F.col("dense_rank_").isNull() | (ds >= F.lit(float(req.score_threshold)))
+        )
+    if chunk_col is not None:
+        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
+    if req.meta_required:
+        out = out.filter(F.size(F.col(meta_col)) > 0)
+    if req.meta_filter:
+        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
+
+    w = rank_window(keys).orderBy(F.col("_rrf_r").desc(), F.col(out_id).asc())
+    out = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= req.limit)
+    cols = [*(F.col(k) for k in keys), F.col(out_id), F.col("rank"),
+            F.round(F.col("_rrf"), req.threshold_decimals).alias("rrf_score")]
+    if chunk_col and "chunk" in req.effective_output_fields:
+        cols.append(F.col(chunk_col))
+    if meta_out:
+        cols.append(meta_kv_column(meta_col))
+    return out.select(*cols)
+
+
 def hybrid_search(
     df: DataFrame,
     postings: DataFrame | None,
@@ -156,9 +252,6 @@ def hybrid_search(
     meta_col is provided. When pairing with hybrid_search_sql for oracle
     checks, pass chunk_expr/meta_kv_expr symmetrically — one side gating on
     a column the other doesn't have shows up as a column-set mismatch."""
-    if (req.meta_filter or req.meta_required) and meta_col is None:
-        raise ValueError("meta_filter/meta_required require meta_col")
-
     dense = _dense_branch(df, req, id_col, vector_col)
     if postings is None:
         sbranch = sparse_search_direct(df, req.sparse_request(),
@@ -166,71 +259,7 @@ def hybrid_search(
     else:
         sbranch = sparse_search(postings, req.sparse_request())
     sparse = sbranch.select(F.col("id"), F.col("rank").alias("sparse_rank_"))
-
-    # union+groupBy fusion, not a full-outer join — see hybrid_search_many
-    fused = (
-        dense.withColumn("sparse_rank_", F.lit(None).cast("int"))
-        .unionByName(
-            sparse.withColumn("dense_rank_", F.lit(None).cast("int"))
-            .withColumn("dense_score", F.lit(None).cast("double")))
-        .groupBy("id")
-        .agg(F.max("dense_rank_").alias("dense_rank_"),
-             F.max("dense_score").alias("dense_score"),
-             F.max("sparse_rank_").alias("sparse_rank_"))
-    )
-    kf = float(RRF_K)
-    rrf = (
-        F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("dense_rank_").cast("double")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("sparse_rank_").cast("double")), F.lit(0.0))
-    )
-    fused = fused.withColumn("_rrf", rrf).withColumn("_rrf_r", F.round(F.col("_rrf"), RANK_DECIMALS))
-
-    # late materialization for the fused survivors (<=100 rows)
-    meta_out = meta_col is not None and "meta" in req.effective_output_fields
-    need_meta = bool(req.meta_filter or req.meta_required) or meta_out
-    payload = [c for c in (chunk_col, meta_col if need_meta else None) if c]
-    if payload:
-        keep = list(dict.fromkeys([id_col, *payload]))
-        out = (
-            df.select(*[F.col(c) for c in keep])
-            .join(F.broadcast(fused.withColumnRenamed("id", "_fid")),
-                  F.col(id_col) == F.col("_fid"), "inner")
-            .drop("_fid")
-        )
-    else:
-        out = fused.withColumnRenamed("id", id_col)
-
-    # score_threshold on the ORIGINAL dense score; sparse-only hits bypass.
-    # Compared in Milvus score space: similarity, or (squared) distance
-    # = -dense_score for L2 (vector_store.py:766-770)
-    if req.score_threshold is not None:
-        ms = (-F.col("dense_score") if req.metric.upper() == "L2"
-              else F.col("dense_score"))
-        ds = F.round(ms, req.threshold_decimals)
-        out = out.filter(
-            F.col("dense_rank_").isNull() | (ds >= F.lit(float(req.score_threshold)))
-        )
-    if chunk_col is not None:
-        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
-    if req.meta_required:
-        out = out.filter(F.size(F.col(meta_col)) > 0)
-    if req.meta_filter:
-        from flouds_vectordb_spark.operators.dense_search import meta_filter_predicate
-
-        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
-
-    w = Window.orderBy(F.col("_rrf_r").desc(), F.col(id_col).asc())
-    out = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= req.limit)
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    cols = [F.col(id_col), F.col("rank"), F.round(F.col("_rrf"), dec).alias("rrf_score")]
-    if chunk_col and "chunk" in req.effective_output_fields:
-        cols.append(F.col(chunk_col))
-    if meta_out:
-        from flouds_vectordb_spark.operators.dense_search import meta_kv_column
-
-        cols.append(meta_kv_column(meta_col))
-    return out.select(*cols)
+    return fuse_and_filter(dense, sparse, df, req, id_col, chunk_col, meta_col)
 
 
 def hybrid_search_sql(
@@ -353,12 +382,16 @@ def hybrid_search_many(
     Plan: ONE dense scan scores the whole block (broadcast query block,
     as batch_search.dense_search_many) with a per-qid branch-limit
     window; ONE term-pruned posting scan serves every sparse branch
-    (sparse_search_many); fusion is a (qid, id) full outer join of two
-    <= nq*50-row scalar tables. With postings=None the posting table is
-    built from df once for the WHOLE block (bit-identical weights to the
-    direct scorer; measured r11 — the batched direct scorer loses, see
-    the inline note). Results are bit-identical to looping hybrid_search
-    per query."""
+    (sparse_search_many). Fusion and everything after it are
+    fuse_and_filter, the same code hybrid_search runs, called with
+    keys=("qid",): one (qid, id) union+groupBy over two <= nq*50-row
+    scalar tables, the post-filters, and a rank window per qid. With
+    postings=None the posting table is built from df once for the WHOLE
+    block (bit-identical weights to the direct scorer; measured r11 — the
+    batched direct scorer loses, see the inline note). Only the branch
+    k-cuts differ from hybrid_search (a per-qid window instead of
+    orderBy().limit()), so per query the results are bit-identical to
+    looping hybrid_search."""
     from flouds_vectordb_spark.operators.batch_search import (
         _pair_score,
         query_block,
@@ -367,8 +400,6 @@ def hybrid_search_many(
         sparse_search_many,
     )
 
-    if (req.meta_filter or req.meta_required) and meta_col is None:
-        raise ValueError("meta_filter/meta_required require meta_col")
     queries = list(queries)  # generators are iterated twice below
     spark = df.sparkSession
     dense_q = [(qid, vec) for qid, vec, _ in queries]
@@ -409,82 +440,8 @@ def hybrid_search_many(
         .select("qid", "id", F.col("rank").alias("sparse_rank_"))
     )
 
-    # union+groupBy fusion, not a full-outer join (r11): the two branch
-    # tables are bounded (<= nq*50 rows each) but a full-outer join can't
-    # broadcast, so it planned a two-sided sort-merge — two exchanges +
-    # sorts. The union form is ONE hash aggregation; max() over the
-    # one-non-null-per-key columns reproduces the outer join's row merge
-    # exactly (each (qid, id) appears at most once per branch).
-    # repartition by qid ALONE before the merge agg (r12): hash(qid)
-    # satisfies both the groupBy(qid, id) clustering requirement (subset
-    # rule) and the final rank window's partitionBy(qid), so the agg and
-    # the window share ONE exchange instead of (qid,id)-agg + qid-window.
-    # Scale-safe unconditionally: both branch tables are already
-    # rank-limited to <= nq*branch_limit rows, so qid-only partitions
-    # stay bounded at any corpus size.
-    fused = (
-        dense.withColumn("sparse_rank_", F.lit(None).cast("int"))
-        .unionByName(
-            sparse.withColumn("dense_rank_", F.lit(None).cast("int"))
-            .withColumn("dense_score", F.lit(None).cast("double")))
-        .repartition("qid")
-        .groupBy("qid", "id")
-        .agg(F.max("dense_rank_").alias("dense_rank_"),
-             F.max("dense_score").alias("dense_score"),
-             F.max("sparse_rank_").alias("sparse_rank_"))
-    )
-    kf = float(RRF_K)
-    rrf = (
-        F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("dense_rank_").cast("double")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("sparse_rank_").cast("double")), F.lit(0.0))
-    )
-    fused = fused.withColumn("_rrf", rrf).withColumn(
-        "_rrf_r", F.round(F.col("_rrf"), RANK_DECIMALS))
-
-    meta_out = meta_col is not None and "meta" in req.effective_output_fields
-    need_meta = bool(req.meta_filter or req.meta_required) or meta_out
-    payload = [c for c in (chunk_col, meta_col if need_meta else None) if c]
-    if payload:
-        keep = list(dict.fromkeys([id_col, *payload]))
-        out = (
-            df.select(*[F.col(c) for c in keep])
-            .join(F.broadcast(fused.withColumnRenamed("id", "_fid")),
-                  F.col(id_col) == F.col("_fid"), "inner")
-            .drop("_fid")
-            .withColumnRenamed(id_col, "id")
-        )
-    else:
-        out = fused
-
-    if req.score_threshold is not None:
-        ms = (-F.col("dense_score") if req.metric.upper() == "L2"
-              else F.col("dense_score"))
-        ds = F.round(ms, req.threshold_decimals)
-        out = out.filter(
-            F.col("dense_rank_").isNull() | (ds >= F.lit(float(req.score_threshold))))
-    if chunk_col is not None:
-        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
-    if req.meta_required:
-        out = out.filter(F.size(F.col(meta_col)) > 0)
-    if req.meta_filter:
-        from flouds_vectordb_spark.operators.dense_search import meta_filter_predicate
-
-        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
-
-    wf = Window.partitionBy("qid").orderBy(F.col("_rrf_r").desc(), F.col("id").asc())
-    out = (out.withColumn("rank", F.row_number().over(wf))
-           .filter(F.col("rank") <= req.limit))
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    cols = [F.col("qid"), F.col("id"), F.col("rank"),
-            F.round(F.col("_rrf"), dec).alias("rrf_score")]
-    if chunk_col and "chunk" in req.effective_output_fields:
-        cols.append(F.col(chunk_col))
-    if meta_out:
-        from flouds_vectordb_spark.operators.dense_search import meta_kv_column
-
-        cols.append(meta_kv_column(meta_col))
-    return out.select(*cols)
+    return fuse_and_filter(dense, sparse, df, req, id_col, chunk_col, meta_col,
+                           keys=("qid",))
 
 
 def hybrid_search_many_sql(

@@ -39,6 +39,7 @@ from flouds_vectordb_spark.functions.hashing import hash64, hash64_sql
 from flouds_vectordb_spark.functions.local import local_df
 from flouds_vectordb_spark.functions.text import tokenize, tokenize_sql
 from flouds_vectordb_spark.lifecycle import tracked_persist as _persist
+from flouds_vectordb_spark.plan_probe import plan_size_bytes
 from flouds_vectordb_spark.sources.tables import spread_small_input
 
 _DENOM_U = float((1 << 60) + 1)  # maps hash64's [0, 2^60) onto (0, 1)
@@ -52,14 +53,6 @@ _DENOM_U = float((1 << 60) + 1)  # maps hash64's [0, 2^60) onto (0, 1)
 # hex in hashlib), log is the same C libm ln the oracle calls, and the
 # fold order (ascending bucket) matches both engines.
 _DSIR_DRIVER_INPUT_BYTES = 16 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
 
 
 from flouds_vectordb_spark.functions.hashing import py_hash64 as _py_hash64
@@ -271,8 +264,8 @@ def dsir_resample(raw: DataFrame, target: DataFrame, n_keep: int,
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     if (not raw.isStreaming and not target.isStreaming
-            and _plan_size_bytes(raw) <= _DSIR_DRIVER_INPUT_BYTES
-            and _plan_size_bytes(target) <= _DSIR_DRIVER_INPUT_BYTES):
+            and plan_size_bytes(raw) <= _DSIR_DRIVER_INPUT_BYTES
+            and plan_size_bytes(target) <= _DSIR_DRIVER_INPUT_BYTES):
         return _dsir_resample_driver(raw, target, n_keep, n_buckets,
                                      id_col, text_col, int(smoothing), seed)
     # spread BEFORE the feature projection: the md5-heavy

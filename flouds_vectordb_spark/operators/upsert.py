@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from flouds_vectordb_spark import catalog as catalog_mod
 from flouds_vectordb_spark.catalog import resolve_data_dir
 from flouds_vectordb_spark.lifecycle import tracked_persist
+from flouds_vectordb_spark.plan_probe import plan_size_bytes
 
 AUTO_FLUSH_MIN_BATCH = 100  # appsettings.json auto_flush_min_batch
 
@@ -952,11 +953,7 @@ class CollectionWriter:
         or no usable estimate)."""
         default = int(src.sparkSession.conf.get(
             "spark.sql.shuffle.partitions", "200"))
-        try:
-            size = int(src._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes())
-        except Exception:
-            return None
+        size = plan_size_bytes(src)
         if size <= 0 or size > (1 << 50):  # unknown / join-inflated
             return None
         n = min(cls._POSTINGS_MAX_PARTS, size // cls._POSTINGS_SRC_BYTES_PER_PART)

@@ -919,7 +919,9 @@ class HnswIndex:
                     **dense_kwargs) -> DataFrame:
         """Batched graph-ANN search composed with the batched exact request
         pipeline (batch_search._ranked_pipeline): the per-qid beam
-        shortlists feed the full per-qid post-filter chain. Returns
+        shortlists feed a per-qid k-cut and then dense_search's own
+        post_filter_tail (the same post-filter chain, rank and projection
+        a single search runs), partitioned by qid. Returns
         (qid, id, rank, score[, ...]).
 
         r8 (VERDICT r7 ask #2): when the request metric IS the index

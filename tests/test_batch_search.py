@@ -25,7 +25,8 @@ def corpus(spark):
     rng = np.random.RandomState(7)
     rows = [
         (i, [float(x) for x in rng.standard_normal(DIM)],
-         f"spark vector scan {i}" if i % 3 else "", {"lang": "en" if i % 2 else "fr"})
+         f"spark vector scan {i}" if i % 3 else "",
+         {} if i % 7 == 0 else {"lang": "en" if i % 2 else "fr"})
         for i in range(300)
     ]
     df = spark.createDataFrame(
@@ -64,39 +65,55 @@ def test_many_equals_single_loop(spark, corpus, qbatch):
 
 @pytest.mark.parametrize("metric", ["COSINE", "L2", "IP"])
 def test_many_metrics_match_single(spark, corpus, qbatch, metric):
-    req = DenseSearchRequest(query_vector=qbatch[0][1], metric=metric,
-                             limit=5, score_threshold=None)
-    batched = _rows(dense_search_many(corpus, qbatch[:2], req))
-    singles = []
-    for qid, v in qbatch[:2]:
-        r1 = DenseSearchRequest(query_vector=list(v), metric=metric,
-                                limit=5, score_threshold=None)
-        for row in dense_search(corpus, r1).collect():
-            singles.append((qid, row["id"], int(row["rank"]),
-                            round(float(row["score"]), 6)))
-    assert batched == sorted(singles)
+    # score_threshold compares in Milvus score space: similarity for
+    # COSINE/IP, distance (the negated score) for L2 — a sign slip in either
+    # path keeps every L2 hit on one side and none on the other
+    for threshold in (None, 0.3):
+        req = DenseSearchRequest(query_vector=qbatch[0][1], metric=metric,
+                                 limit=5, score_threshold=threshold)
+        batched = _rows(dense_search_many(corpus, qbatch[:2], req))
+        singles = []
+        for qid, v in qbatch[:2]:
+            r1 = DenseSearchRequest(query_vector=list(v), metric=metric,
+                                    limit=5, score_threshold=threshold)
+            for row in dense_search(corpus, r1).collect():
+                singles.append((qid, row["id"], int(row["rank"]),
+                                round(float(row["score"]), 6)))
+        assert batched == sorted(singles), threshold
+        assert batched, threshold
 
 
 def test_many_postfilters_match_single(spark, corpus, qbatch):
-    """The shared post-filter chain (text + meta + offset + projection)
-    applies per qid exactly as the single-query pipeline does."""
-    kw = dict(metric="COSINE", limit=10, offset=3, score_threshold=None,
-              text_filter="vector scan", minimum_words_match=2,
-              meta_filter={"lang": "en"}, output_fields=("chunk", "meta"))
-    req = DenseSearchRequest(query_vector=qbatch[0][1], **kw)
-    batched = dense_search_many(corpus, qbatch, req, chunk_col="chunk",
-                                meta_col="meta")
-    assert batched.columns == ["qid", "id", "rank", "score", "chunk", "meta_kv"]
-    got = sorted((int(r["qid"]), r["id"], int(r["rank"]), r["chunk"], r["meta_kv"])
-                 for r in batched.collect())
-    singles = []
-    for qid, v in qbatch:
-        r1 = DenseSearchRequest(query_vector=list(v), **kw)
-        for row in dense_search(corpus, r1, chunk_col="chunk",
-                                meta_col="meta").collect():
-            singles.append((qid, row["id"], int(row["rank"]), row["chunk"],
-                            row["meta_kv"]))
-    assert got == sorted(singles)
+    """The shared post-filter chain (threshold + text + meta_required +
+    meta_filter + offset + rounding + projection) applies per qid exactly
+    as the single-query pipeline does."""
+    cases = [
+        dict(offset=3, score_threshold=None, text_filter="vector scan",
+             minimum_words_match=2, meta_filter={"lang": "en"}),
+        # every 7th row has an empty meta map, which meta_required drops
+        dict(score_threshold=0.2, round_decimal=2, meta_required=True,
+             text_filter="spark", minimum_words_match=1),
+    ]
+    for case in cases:
+        kw = dict(metric="COSINE", limit=10, output_fields=("chunk", "meta"), **case)
+        req = DenseSearchRequest(query_vector=qbatch[0][1], **kw)
+        batched = dense_search_many(corpus, qbatch, req, chunk_col="chunk",
+                                    meta_col="meta")
+        assert batched.columns == ["qid", "id", "rank", "score", "chunk", "meta_kv"]
+        got = sorted((int(r["qid"]), r["id"], int(r["rank"]), r["score"],
+                      r["chunk"], r["meta_kv"]) for r in batched.collect())
+        singles = []
+        for qid, v in qbatch:
+            r1 = DenseSearchRequest(query_vector=list(v), **kw)
+            for row in dense_search(corpus, r1, chunk_col="chunk",
+                                    meta_col="meta").collect():
+                singles.append((qid, row["id"], int(row["rank"]), row["score"],
+                                row["chunk"], row["meta_kv"]))
+        assert got == sorted(singles), case
+        assert got, case
+        if case.get("meta_required"):
+            assert all(r[5] for r in got)
+            assert all(r[3] == round(r[3], 2) for r in got)
 
 
 def test_ivf_many_matches_exact_on_clustered(spark, qbatch, tmp_path_factory):
@@ -299,24 +316,33 @@ def test_hybrid_search_many_matches_single_loop(spark, corpus):
     queries = [(i, [float(x) for x in rng.standard_normal(DIM)],
                 ["spark vector", "scan 7", "vector vector scan"][i])
                for i in range(3)]
-    req = HybridSearchRequest(query_vector=queries[0][1], text_filter="x",
-                              limit=10, meta_filter={"lang": "en"},
-                              output_fields=("chunk", "meta"))
     posts = bm25_postings(corpus)
-    got = {}
-    res = hybrid_search_many(corpus, posts, queries, req,
-                             chunk_col="chunk", meta_col="meta")
-    for r in res.collect():
-        got.setdefault(r["qid"], []).append(
-            (r["rank"], r["id"], r["rrf_score"], r["chunk"], r["meta_kv"]))
-    for qid, vec, text in queries:
-        sreq = HybridSearchRequest(query_vector=vec, text_filter=text,
-                                   limit=10, meta_filter={"lang": "en"},
-                                   output_fields=("chunk", "meta"))
-        single = [(r["rank"], r["id"], r["rrf_score"], r["chunk"], r["meta_kv"])
-                  for r in hybrid_search(corpus, posts, sreq,
-                                         chunk_col="chunk", meta_col="meta").collect()]
-        assert sorted(got.get(qid, [])) == single, qid
+    vecs = {r["id"]: np.array(r["vector"]) for r in corpus.collect()}
+    bypassed = 0
+    # the second case's threshold drops dense hits below 0.3 similarity,
+    # while sparse-only hits (no dense rank) bypass it
+    for knobs in (dict(), dict(score_threshold=0.3, offset=2)):
+        kw = dict(limit=10, meta_filter={"lang": "en"},
+                  output_fields=("chunk", "meta"), **knobs)
+        req = HybridSearchRequest(query_vector=queries[0][1], text_filter="x", **kw)
+        got = {}
+        res = hybrid_search_many(corpus, posts, queries, req,
+                                 chunk_col="chunk", meta_col="meta")
+        for r in res.collect():
+            got.setdefault(r["qid"], []).append(
+                (r["rank"], r["id"], r["rrf_score"], r["chunk"], r["meta_kv"]))
+        for qid, vec, text in queries:
+            sreq = HybridSearchRequest(query_vector=vec, text_filter=text, **kw)
+            single = [(r["rank"], r["id"], r["rrf_score"], r["chunk"], r["meta_kv"])
+                      for r in hybrid_search(corpus, posts, sreq, chunk_col="chunk",
+                                             meta_col="meta").collect()]
+            assert sorted(got.get(qid, [])) == single, (qid, knobs)
+            if knobs:
+                q = np.array(vec)
+                bypassed += sum(
+                    float(vecs[i] @ q / np.linalg.norm(vecs[i]) / np.linalg.norm(q)) < 0.3
+                    for _, i, *_ in single)
+    assert bypassed
 
 
 def test_catalog_sparse_and_hybrid_many_dispatch(spark, tmp_path_factory):

@@ -281,6 +281,46 @@ def test_persist_scope_is_per_thread(spark):
     other_df.unpersist()
 
 
+def test_no_aqe_overlapping_threads_restore_unset_key(spark):
+    # B asks for its block while A's is open and would close after A's:
+    # each block must see AQE off, and a key that was unset beforehand must
+    # end unset. Interleaved save/restore pairs leave it pinned to 'false'
+    # (B saves A's 'false' and restores it last).
+    import threading
+    import time
+
+    from flouds_vectordb_spark.lifecycle import no_aqe
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    a_in = threading.Event()
+    seen = {}
+
+    def block(name, hold):
+        with no_aqe(spark):
+            seen[name] = spark.conf.get(key)
+            a_in.set()
+            time.sleep(hold)
+
+    try:
+        a = threading.Thread(target=block, args=("a", 0.3))
+        b = threading.Thread(target=block, args=("b", 0.6))
+        a.start()
+        assert a_in.wait(30)
+        b.start()
+        a.join(30)
+        b.join(30)
+        assert not a.is_alive() and not b.is_alive()
+        assert seen == {"a": "false", "b": "false"}
+        assert spark.conf.get(key, None) is None
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 def test_components_min_label_over_chains_and_cliques(spark):
     from flouds_vectordb_spark.operators.dedup import dedup_components
 

@@ -229,6 +229,7 @@ def test_classify_vectorized_equals_reference():
         "combining áccents ètoile works",
         "x " * 300,  # long repetitive doc (DOC_TOP truncation ties)
         "the quick brown fox jumps over the lazy dog",
+        "hello world \ud800 bonjour le monde",  # lone surrogate
     ]
     for t in cases:
         assert classify_text(t) == classify_text_ref(t), repr(t)
